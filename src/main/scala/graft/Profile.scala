@@ -1,30 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Per-job profiler for a single query: runs one warmup pass, then a
   * measured pass with a listener that records every job's wall, stage
   * count, task count, and shuffle bytes — the measurement tool behind
-  * OPTIMIZATION_r12's "where does the wall go" numbers. Mirrors
-  * Bench's session config exactly so the walls are comparable.
+  * OPTIMIZATION_r12's "where does the wall go" numbers. Runs Bench's
+  * session ([[GraftSession]]) so the walls are comparable.
   * Usage: runMain graft.Profile <sfDir> <query>[,<query>...]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     case class Job(id: Int, desc: String, t0: Long) {
       var t1: Long = 0L
       var stages = 0
@@ -94,13 +83,18 @@ object Profile {
       // warmup (codegen + page cache), like Bench's warmup pass
       fn(spark, sfDir).count()
       fn(spark, sfDir).count()
+      // the listener reads `recording` at delivery, so the bus is
+      // drained on both sides of the measured pass: no warmup event
+      // lands in its tables and no late stage drops out of them
+      def drain(): Unit = org.apache.spark.GraftListenerGlue.drain(spark.sparkContext)
+      drain()
       jobs.clear(); stageToJob.clear(); stages.clear()
       recording = true
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      drain()
       recording = false
-      Thread.sleep(300) // let listener events drain
       println(f"%n=== $name total ${wall}%.3f s ===")
       println(f"${"job"}%4s ${"wall_s"}%8s ${"stg"}%4s ${"tasks"}%6s ${"shufMB"}%8s ${"inMB"}%8s  desc")
       jobs.synchronized {

@@ -216,7 +216,7 @@ object SparkEntry {
     // the oracle recomputes from the feed (a clean cycle must report
     // exactly one green row per summary suite and one per key)
     "q_library_cycle" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cycle")
+      val tmp = GraftSession.scratch(s, "graft_cycle")
       val rawDir = s"$tmp/raw"
       Tables.events(s, dir).filter(col("event_type") === "purchase")
         .select(concat_ws("|",
@@ -250,8 +250,7 @@ object SparkEntry {
     // days with doubled values — the read-back must show exactly the
     // incremental days replaced and every other day untouched
     "q_reload_readback" -> ((s, dir) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft_wh")
-        .toString + "/t"
+      val wh = GraftSession.scratch(s, "graft_wh").toString + "/t"
       val ev = Tables.events(s, dir).select(col("event_id"),
         to_date(col("ts")).as("day"), col("user_id"), col("event_type"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
@@ -289,8 +288,7 @@ object SparkEntry {
     // planner flags) — the compactor folds them, and the reader view
     // must equal the plain one-shot 5-minute rollup bit-for-bit
     "q_rollup_maintenance" -> ((s, dir) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft_roll")
-        .toString + "/wh"
+      val wh = GraftSession.scratch(s, "graft_roll").toString + "/wh"
       val ev = Tables.events(s, dir)
         .filter(to_date(col("ts")) === lit("2024-01-15").cast("date"))
       Seq(0L, 1L).foreach { bid =>
@@ -311,7 +309,7 @@ object SparkEntry {
     // SAME config rules and partition-overwrites the routed table,
     // and the warehouse read-back is graded against the feed
     "q_stream_ingest" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ing")
+      val tmp = GraftSession.scratch(s, "graft_ing")
       val rawDir = s"$tmp/raw"
       val wh = s"$tmp/wh"
       val feed = Tables.events(s, dir)
@@ -2033,7 +2031,7 @@ object SparkEntry {
 
   private def configRun(s: SparkSession): DataFrame = {
     import graft.etl.{ChillPipeline, ConfigFile, WorkbookConfig}
-    val rawDir = java.nio.file.Files.createTempDirectory("q_config_run")
+    val rawDir = GraftSession.scratch(s, "q_config_run")
     def writeRaw(name: String, region: String, rows: Seq[String]): Unit =
       java.nio.file.Files.writeString(rawDir.resolve(name),
         s"#REGION=$region\nid|grp|cnt\n" + rows.mkString("\n") + "\nJUNK\nTRAILER")

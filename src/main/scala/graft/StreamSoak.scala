@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sustained micro-batch soak for the streaming family.
@@ -61,28 +61,21 @@ object StreamSoak {
     val outPath = args(1)
     val nFiles = if (args.length > 2) args(2).toInt else 1000
     val compactEvery = if (args.length > 3) args(3).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep every progress event: the state-size series IS the
-      // artifact. The floor covers legs whose batch count is NOT
-      // nFiles-derived (the alarm leg's (day, family) slicing can
-      // exceed a small smoke nFiles — the r12 smoke caught exactly
-      // that as a silently truncated progress buffer)
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(nFiles, 2048) + 64)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // keep every progress event: the state-size series IS the
+    // artifact. The floor covers legs whose batch count is NOT
+    // nFiles-derived (the alarm leg's (day, family) slicing can
+    // exceed a small smoke nFiles — the r12 smoke caught exactly
+    // that as a silently truncated progress buffer)
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+      math.max(nFiles, 2048) + 64)
     import graft.streaming.EventStream
 
     // host-drift sentinel bracketing the whole soak (see graft.Sentinel)
     val sentinelBefore = Sentinel.seconds()
 
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_soak")
-      .toString
+    // the staged feed is multi-GB at 10×: scratch goes with the session
+    val work = GraftSession.scratch(spark, "stream_soak").toString
     val feedDir = s"$work/feed"
 
     // ---- stage the feed: N ts-contiguous parquet slices -------------
@@ -209,7 +202,8 @@ object StreamSoak {
 
     // The watermark arithmetic below was pinned EMPIRICALLY against
     // Spark's observed behavior (per-batch progress + per-row replay,
-    // see the r12 WmProbe notes in BENCH_NOTES_r12.md):
+    // by a since-deleted probe main; the late-data gates below now
+    // enforce it on every soak):
     //  - the LATE-EVENTS filter of batch b uses the PREVIOUS batch's
     //    displayed watermark (the eviction watermark advances a batch
     //    ahead of the late-row filter);
@@ -775,8 +769,6 @@ object StreamSoak {
       .foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.write(target, out.getBytes("UTF-8"))
     println(out)
-    // best-effort scratch cleanup (the staged feed is multi-GB at 10×)
-    scala.reflect.io.Directory(new java.io.File(work)).deleteRecursively()
     spark.stop()
   }
 }

@@ -1,34 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // non-ANSI: fingerprint/rolling-hash arithmetic relies on wrap-around
-      .config("spark.sql.ansi.enabled", "false")
-      // typed-aggregate scale guard: ObjectHashAggregate falls back to
-      // SORT-based aggregation after only 128 in-memory keys (the
-      // Spark default) — for small-state aggregates like the top-k
-      // heaps that is a catastrophic cliff (the 100x soak measured the
-      // kNN-graph top-k stage sorting ~300M scored rows instead of
-      // heap-folding them). 16k keys covers every per-task key density
-      // in the suite while bounding the map even for the BIG-state
-      // aggregates (HyperBall's 4KB HLL registers: 16k x 4KB = 64MB
-      // per task — a 256k threshold OOM'd exactly there; states
-      // beyond the threshold degrade gracefully to the sort path)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      // µs parquet timestamps so DuckDB reads the same instants back
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // fail fast, in ONE place, if the driver regenerated testdata with
     // a schema this build doesn't accept (round-5 lesson)

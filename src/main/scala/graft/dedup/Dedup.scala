@@ -921,10 +921,17 @@ object Dedup {
     * candidate generator (banded MinHash, sorted neighborhood, …)
     * actually surfaces — the number to check before trusting an
     * approximate dedup pass at 100 TB, mirroring [[graft.ann.Ann.annRecall]]
-    * on the ANN side. Both inputs are (doc_a, doc_b) pair tables;
-    * the overlap is one pair-key left join, and recall/precision are
-    * the two final divisions over exact BIGINT counts. Output is one
-    * row regardless of corpus size.
+    * on the ANN side. Both inputs are (doc_a, doc_b) pair tables,
+    * flagged and unioned; one pair-keyed aggregation takes each pair's
+    * max flags, a global sum turns them into the exact BIGINT set
+    * sizes and overlap, and recall/precision are the two final
+    * divisions. Output is one row regardless of corpus size.
+    *
+    * Contract: each input holds every (doc_a, doc_b) pair at most once
+    * and no NULL doc id (true of the grouped / distinct miners). The
+    * aggregate relies on it: a duplicate pair counts once, and NULL
+    * keys group as equal, so a NULL pair present in both inputs would
+    * count as found.
     */
   def blockingRecall(exactPairs: DataFrame, candidatePairs: DataFrame): DataFrame = {
     // ONE pass over each miner and NO pair join: flag-union the two

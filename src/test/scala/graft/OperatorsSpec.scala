@@ -5,25 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
+  // four threads on any host: the plan audits pin shapes at this width
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // typed-aggregate scale guard: ObjectHashAggregate falls back to
-      // SORT-based aggregation after only 128 in-memory keys (the
-      // Spark default) — for small-state aggregates like the top-k
-      // heaps that is a catastrophic cliff (the 100x soak measured the
-      // kNN-graph top-k stage sorting ~300M scored rows instead of
-      // heap-folding them). 16k keys covers every per-task key density
-      // in the suite while bounding the map even for the BIG-state
-      // aggregates (HyperBall's 4KB HLL registers: 16k x 4KB = 64MB
-      // per task — a 256k threshold OOM'd exactly there; states
-      // beyond the threshold degrade gracefully to the sort path)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -51,6 +35,28 @@ class OperatorsSpec extends AnyFunSuite {
     val empty = counts.filter(_._2 == 0).keys.toSeq
       .filterNot(Set("q_recon_missing")) // legitimately may be empty
     assert(empty.isEmpty, s"unexpected empty results: $empty")
+  }
+
+  test("the test session carries GraftSession's conf") {
+    val c = spark.conf
+    assert(c.get("spark.sql.ansi.enabled") == "false")
+    assert(c.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "16384")
+    assert(c.get("spark.sql.session.timeZone") == "UTC")
+    assert(c.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(c.get("spark.sql.shuffle.partitions") == "4")
+  }
+
+  test("scratch dirs are distinct under one root, which deleteScratch removes") {
+    val a = GraftSession.scratch(spark, "spec")
+    val b = GraftSession.scratch(spark, "spec")
+    assert(a != b && a.getParent == b.getParent)
+    java.nio.file.Files.writeString(a.resolve("f.txt"), "x")
+    GraftSession.deleteScratch(spark.sparkContext)
+    assert(!java.nio.file.Files.exists(a.getParent))
+    // the next call opens a fresh root for the still-running session
+    val c = GraftSession.scratch(spark, "spec")
+    assert(java.nio.file.Files.isDirectory(c) && c.getParent != a.getParent)
   }
 
   test("oracleSql keys are a subset of queries") {

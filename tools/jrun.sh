@@ -10,7 +10,7 @@
 # local-dir default derives from).
 # GRAFT_EXTRA_OPTS (optional): extra JVM -D flags appended verbatim —
 # the hook for per-run Spark conf experiments (system properties feed
-# SparkSession.builder), e.g.
+# the session graft.GraftSession builds), e.g.
 #   GRAFT_EXTRA_OPTS="-Dspark.shuffle.sort.bypassMergeThreshold=16"
 # GRAFT_CLASSES (optional): alternate compiled-classes dir (an
 # alternating-binary run against a git-archive build).
